@@ -23,6 +23,15 @@ catalog jars, so the same contract is implemented over parquet with a
   instant leaves the previous manifest — and therefore every
   partition's previous generation — fully readable.
 
+The merge itself runs on the driver in Arrow: one Spark action
+(``toArrow``) runs the micro-batch plan and returns its rows with their
+partition ids, the touched partitions' current files are read with
+``pyarrow.parquet``, and the latest-wins rows are written back as one
+parquet file per partition.  A micro-batch therefore costs one Spark
+job, and the driver holds the batch plus its touched partitions — the
+memory bound of this sink.  Tables whose touched partitions do not fit
+the driver belong in :class:`IcebergUpsertSink`, the production path.
+
 Single-writer assumption: exactly one UpsertSink instance may write a
 given path at a time (Structured Streaming guarantees this per query
 via the checkpoint lock; two concurrent *queries* writing one path
@@ -35,13 +44,36 @@ generation another writer is about to commit.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _utc_int96(t, int96):
+    """``t`` (an Arrow schema or type) with every timestamp stored as
+    INT96 made ``timestamp[us, tz=UTC]``.  Spark writes TimestampType as
+    INT96, which reads back naive; its values are UTC instants, the
+    type ``toArrow`` gives a batch.  ``int96`` yields, for each parquet
+    leaf column in schema order, whether it is INT96."""
+    if isinstance(t, pa.Schema):
+        return pa.schema([f.with_type(_utc_int96(f.type, int96)) for f in t])
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_utc_int96(f.type, int96)) for f in t])
+    if pa.types.is_map(t):
+        return pa.map_(t.key_field.with_type(_utc_int96(t.key_type, int96)),
+                       t.item_field.with_type(_utc_int96(t.item_type, int96)))
+    if pa.types.is_list(t):
+        return pa.list_(t.value_field.with_type(_utc_int96(t.value_type, int96)))
+    return pa.timestamp("us", tz="UTC") if next(int96) else t
 
 
 class UpsertSink:
@@ -50,6 +82,11 @@ class UpsertSink:
 
     Latest-wins per key (ties broken by batch id), so replaying a batch
     is a no-op — the exactly-once contract the north rule requires.
+
+    Each call is one Spark job: the batch is collected as Arrow and
+    merged with its touched partitions on the driver, so a call needs
+    driver memory for the batch plus those partitions.  At production
+    scale use :class:`IcebergUpsertSink`.
 
     ``num_buckets`` sizes the bucket fan-out: a micro-batch rewrites
     only the partitions containing its keys, so at scale (keys ≫
@@ -137,11 +174,17 @@ class UpsertSink:
     def _part_id(self, row) -> int | str:
         return f"{row['__day']}/{row['__bucket']}" if self.day_col else row["__bucket"]
 
-    def _part_rel(self, gen_name: str, part_id) -> str:
+    def _part_values(self, part_id) -> dict:
+        """Partition column -> value for a partition id (inverse of
+        ``_part_id``)."""
         if self.day_col:
             day, bucket = str(part_id).rsplit("/", 1)
-            return f"{gen_name}/__day={day}/__bucket={bucket}"
-        return f"{gen_name}/__bucket={part_id}"
+            return {"__day": day, "__bucket": int(bucket)}
+        return {"__bucket": int(part_id)}
+
+    def _part_rel(self, gen_name: str, part_id) -> str:
+        return "/".join([gen_name] + [f"{c}={v}" for c, v in
+                                      self._part_values(part_id).items()])
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         mf = self._read_manifest()
@@ -149,64 +192,90 @@ class UpsertSink:
             return None
         paths = [os.path.join(self.path, rel) for rel in mf.values()]
         # generations can be frozen at different batches; _merge_batch
-        # supports schema evolution (unionByName allowMissingColumns), so
-        # partitions may span divergent schemas — without mergeSchema a
-        # single footer would win and silently drop later-added columns
+        # supports schema evolution (permissive concat), so partitions
+        # may span divergent schemas — without mergeSchema a single
+        # footer would win and silently drop later-added columns
         return spark.read.option("mergeSchema", "true").parquet(*paths)
 
+    def _read_partition(self, rel: str, part_id) -> pa.Table:
+        """The committed rows of one partition, with its partition
+        columns added back from the partition id."""
+        d = os.path.join(self.path, rel)
+        tables = []
+        for name in sorted(os.listdir(d)):
+            if name.startswith(("_", ".")):  # _SUCCESS, .crc: Hadoop side files
+                continue
+            with pq.ParquetFile(os.path.join(d, name),
+                                coerce_int96_timestamp_unit="us") as f:
+                t = f.read()
+                leaves = [c.physical_type == "INT96" for c in f.schema]
+            if any(leaves):
+                t = t.cast(_utc_int96(t.schema, iter(leaves)))
+            tables.append(t)
+        t = pa.concat_tables(tables, promote_options="permissive")
+        for c, v in self._part_values(part_id).items():
+            t = t.append_column(c, pa.repeat(v, t.num_rows))
+        return t
+
+    def _latest_rows(self, t: pa.Table) -> np.ndarray:
+        """Row positions of the latest row per key: highest ``order_col``
+        (nulls last, NaN first, as Spark orders them), then highest
+        ``__batch_id``; remaining ties go to the earlier row."""
+        cols, sort_keys = {}, []
+        if self.order_col:
+            order = t.column(self.order_col)
+            if pa.types.is_floating(order.type):
+                cols["__nan"] = pc.is_nan(order)
+                sort_keys.append(("__nan", "descending"))
+            cols["__order"] = order
+            sort_keys.append(("__order", "descending"))
+        cols["__batch_id"] = t.column("__batch_id")
+        sort_keys.append(("__batch_id", "descending"))
+        ranked = pc.sort_indices(pa.table(cols), sort_keys=sort_keys,
+                                 null_placement="at_end")
+        keys = t.select(self.keys).take(ranked)
+        keys = keys.append_column("__pos", pa.array(np.arange(len(ranked))))
+        first = keys.group_by(self.keys).aggregate([("__pos", "min")])
+        return np.sort(ranked.to_numpy()[first.column("__pos_min").to_numpy()])
+
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         pcols = self._part_cols()
+        # the one Spark action: runs the batch plan, partition ids included
         new = self._with_partitions(
             batch.withColumn("__batch_id", F.lit(batch_id))
-        ).persist()  # two actions below must not re-run the stateful plan
-        try:
-            touched = sorted(
-                self._part_id(r) for r in new.select(*pcols).distinct().collect()
-            )
-            if not touched:
-                return  # empty batch: nothing to merge, manifest unchanged
-            mf = self._read_manifest()
-            cur_paths = [os.path.join(self.path, mf[p]) for p in touched if p in mf]
-            if cur_paths:
-                # only the touched partitions are read back — per-batch
-                # I/O is O(touched), the parquet analog of MERGE INTO
-                # with (days x bucket) partition pruning.  mergeSchema:
-                # touched partitions may be frozen at generations with
-                # divergent (evolved) schemas
-                current = self._with_partitions(
-                    spark.read.option("mergeSchema", "true").parquet(*cur_paths)
-                )
-                merged = current.unionByName(new, allowMissingColumns=True)
-            else:
-                merged = new
-            # latest-wins per key: highest (order_col, batch_id) survives —
-            # idempotent under replay of the same batch
-            order = ([F.col(self.order_col).desc_nulls_last()] if self.order_col else []) + [
-                F.col("__batch_id").desc()
-            ]
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*self.keys).orderBy(*order)
-            deduped = (
-                merged.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            # no leading underscore on gen dirs: Hadoop listings treat
-            # _-prefixed names as hidden
-            gen_name = f"gen_{batch_id}_{uuid.uuid4().hex}"
-            (
-                deduped.repartition(len(touched), *pcols)
-                .write.partitionBy(*pcols)
-                .parquet(os.path.join(self.path, gen_name))
-            )
-            for p in touched:
-                mf[p] = self._part_rel(gen_name, p)
-            self._commit_manifest(mf)
-            self._gc(mf)
-        finally:
-            new.unpersist()
+        ).toArrow()
+        if not new.num_rows:
+            return  # empty batch: nothing to merge, manifest unchanged
+        touched = sorted(
+            self._part_id(r)
+            for r in new.select(pcols).group_by(pcols).aggregate([]).to_pylist()
+        )
+        mf = self._read_manifest()
+        # only the touched partitions are read back — per-batch I/O is
+        # O(touched), the parquet analog of MERGE INTO with (days x
+        # bucket) partition pruning.  Their generations may be frozen at
+        # divergent (evolved) schemas, which permissive concat unions.
+        # Committed rows come first, so a replayed batch keeps them.
+        merged = pa.concat_tables(
+            [self._read_partition(mf[p], p) for p in touched if p in mf] + [new],
+            promote_options="permissive",
+        )
+        merged = merged.take(self._latest_rows(merged))
+        data = merged.drop_columns(pcols)
+        # no leading underscore on gen dirs: Hadoop listings treat
+        # _-prefixed names as hidden
+        gen_name = f"gen_{batch_id}_{uuid.uuid4().hex}"
+        for p in touched:
+            mask = functools.reduce(pc.and_, [
+                pc.equal(merged.column(c), v) for c, v in self._part_values(p).items()
+            ])
+            rel = self._part_rel(gen_name, p)
+            os.makedirs(os.path.join(self.path, rel))
+            pq.write_table(data.filter(mask),
+                           os.path.join(self.path, rel, "part-00000.parquet"))
+            mf[p] = rel
+        self._commit_manifest(mf)
+        self._gc(mf)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         self._merge_batch(batch, batch_id)

@@ -7,12 +7,15 @@ all of them, and compares elementwise against the pure-Python
 reference transcription (the same functions riko applies per item).
 """
 
+import datetime as dt
+import functools
 import random
 import re
 import string
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 from riko_spark.plans.flow import Flow
 
@@ -409,3 +412,68 @@ def test_robots_gate_total_and_single_row(spark):
     assert len(out) == 200
     assert {r["doc_id"] for r in out} == set(range(200))
     assert all(r["allowed"] in (True, False) for r in out)
+
+
+_SINK_COLS = [("k", "string"), ("g", "int"), ("v", "int"), ("o", "int"),
+              ("ts", "timestamp"), ("x", "string")]
+
+
+def _sink_batches(rng, order_col, day_col):
+    """A random batch sequence for UpsertSink: duplicate and null keys,
+    null ``order_col`` and ``day_col`` values, a column (``x``) added
+    from batch 2 on, and a replay of the last batch under its own id.
+    Yields ``(batch_id, ddl, rows)``."""
+    seq = []
+    for b in range(4):
+        cols = [c for c in _SINK_COLS if
+                (c[0] != "o" or order_col) and (c[0] != "ts" or day_col)
+                and (c[0] != "x" or b >= 2)]
+        rows = []
+        for _ in range(rng.randrange(1, 16)):
+            k, g = rng.choice(["a", "b", "c", "d", "e", None]), rng.randrange(2)
+            # the day is a function of the key, as the sink requires;
+            # keys None and "e" land in the null-day partition
+            day = (None if k in (None, "e")
+                   else dt.datetime(2024, 1, 1 + (ord(k) + g) % 3, 12))
+            val = {"k": k, "g": g, "v": rng.randrange(100),
+                   "o": rng.choice([None, 1, 2, 3]), "ts": day,
+                   "x": rng.choice([None, "p", "q"])}
+            rows.append(tuple(val[c] for c, _ in cols))
+        seq.append((b, ", ".join(f"{c} {t}" for c, t in cols), rows))
+    return seq + [seq[-1]]
+
+
+def _latest_wins_reference(spark, batches, keys, order_col):
+    """Key -> candidate rows under the Window/row_number rule over the
+    union of the batches: highest ``order_col`` (nulls last), then
+    highest batch id.  Rows tied at the top are all candidates, since
+    row_number picks among them arbitrarily."""
+    union = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [spark.createDataFrame(rows, ddl).withColumn("__batch_id", F.lit(b))
+         for b, ddl, rows in batches])
+    order = ([F.col(order_col).desc_nulls_last()] if order_col else []) + [
+        F.col("__batch_id").desc()]
+    top = (union.withColumn("__rank", F.rank().over(Window.partitionBy(*keys).orderBy(*order)))
+           .filter("__rank = 1").drop("__rank", "__batch_id"))
+    out = {}
+    for r in top.collect():
+        out.setdefault(tuple(r[k] for k in keys), []).append(r.asDict())
+    return out
+
+
+@pytest.mark.parametrize("order_col,day_col", [(None, None), ("o", "ts")])
+def test_upsert_sink_latest_wins_random_batches(spark, tmp_path, order_col, day_col):
+    from riko_spark.streaming.sink import UpsertSink
+
+    keys = ["k", "g"]
+    batches = _sink_batches(random.Random(f"{order_col}/{day_col}"), order_col, day_col)
+    sink = UpsertSink(str(tmp_path / "sink"), keys=keys, order_col=order_col,
+                      num_buckets=3, day_col=day_col)
+    for b, ddl, rows in batches:
+        sink(spark.createDataFrame(rows, ddl), b)
+    got = [r.asDict() for r in sink.result(spark).collect()]
+    want = _latest_wins_reference(spark, batches, keys, order_col)
+    assert len(got) == len(want)
+    for row in got:
+        assert row in want[tuple(row[k] for k in keys)], row
