@@ -1511,17 +1511,25 @@ def q_warc_sharded(spark, sf):
 
 def q_media_metadata(spark, sf):
     """Magic-sniff classification over REAL planted blobs — PNG and BMP
-    from the image planting formula, RIFF/WAVE from the audio one, raw
-    text bytes as the octet-stream control; expected types recomputed
-    by the oracle from the planting id arithmetic (round 5: the RIFF
-    branch now checks the WAVE form type at bytes 9-12, so a real WAV
-    header is required to classify as audio/wav; round 6: real GIF89a
-    blobs exercise the new image/gif branch)."""
+    from the image planting formula, a canonical 44-byte RIFF/WAVE PCM
+    header (no samples: the sniff never decodes audio), raw text bytes
+    as the octet-stream control; expected types recomputed by the
+    oracle from the planting id arithmetic (round 5: the RIFF branch
+    now checks the WAVE form type at bytes 9-12, so a real WAV header
+    is required to classify as audio/wav; round 6: real GIF89a blobs
+    exercise the new image/gif branch)."""
+    import struct
+
     from riko_spark.operators.multimodal import media_metadata_op
 
+    wav_header = (b"RIFF" + struct.pack("<I", 36) + b"WAVE"
+                  + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000,
+                                          16000, 2, 16)
+                  + b"data" + struct.pack("<I", 0))
     imgs = _planted_images(spark, sf)
-    wavs = _planted_audio(spark, sf).select(
-        (F.col("id") + F.lit(100000)).alias("id"), "blob")
+    wavs = _t(spark, sf, "documents").filter(F.col("doc_id") < 48).select(
+        (F.col("doc_id") + F.lit(100000)).alias("id"),
+        F.lit(bytearray(wav_header)).alias("blob")).distinct()
     txt = _t(spark, sf, "documents").filter(F.col("doc_id") < 200).select(
         (F.col("doc_id") + F.lit(200000)).alias("id"),
         F.encode("text", "utf-8").alias("blob"))
@@ -1944,347 +1952,6 @@ def q_image_features_tiff(spark, sf):
     )
 
 
-_WAV_N = 48
-
-
-def _planted_audio(spark, sf):
-    """Planted PCM WAVs: interleaved sample j of doc i is
-    ((i*37 + j*17) mod 2001) - 1000, rate/channels/frames are closed
-    forms of i — every per-window sum-of-squares is recomputable by the
-    oracle from the formula alone (riko_spark/functions/wavcodec.py)."""
-    ids = _t(spark, sf, "documents").select("doc_id").filter(
-        F.col("doc_id") < _WAV_N).distinct()
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from riko_spark.functions.wavcodec import encode_wav
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                rate = 4000 + 2000 * (i % 3)
-                ch = 1 + (i % 2)
-                frames = 600 + 100 * (i % 5)
-                j = np.arange(frames * ch, dtype=np.int64)
-                s = ((i * 37 + j * 17) % 2001 - 1000).astype(np.int16)
-                rows.append((i, bytearray(encode_wav(s.reshape(frames, ch),
-                                                     rate))))
-            yield pd.DataFrame(rows, columns=["id", "blob"])
-
-    return ids.mapInPandas(gen, "id bigint, blob binary")
-
-
-def q_audio_features(spark, sf):
-    """REAL WAV decode + windowed loudness: the RIFF walk, PCM decode
-    and per-256-frame sum-of-squares are checked value-exactly against
-    the oracle's generate_series recomputation of the planted sample
-    formula (win_sumsq is an exact int64 — no float compare)."""
-    from riko_spark.operators.multimodal import audio_features_op
-
-    out = audio_features_op(_planted_audio(spark, sf),
-                            {"window_frames": 256})
-    return out.select(
-        "id", "sample_rate", "channels", "n_frames", "duration_ms",
-        "win_idx", "win_frames", "win_sumsq",
-    )
-
-
-def q_audio_features_zcr(spark, sf):
-    """Per-window zero-crossing counts over the planted PCM corpus:
-    per-channel sign transitions between consecutive frames, windows
-    of 256 — the oracle evaluates the planting formula at BOTH frame
-    positions of every transition (closed form, no lag window needed)
-    and counts sign flips exactly, mono and stereo."""
-    from riko_spark.operators.multimodal import audio_features_op
-
-    out = audio_features_op(_planted_audio(spark, sf),
-                            {"window_frames": 256})
-    return out.select("id", "win_idx", "win_frames", "win_zcr")
-
-
-#: µ-law code bytes planted by _planted_audio_g711 and their ITU G.711
-#: linear expansions — the oracle pins the SAME eight spec values in a
-#: CASE, so a wrong expansion table cannot self-certify.
-_G711_CODES = (0x00, 0x80, 0xFF, 0x9A, 0x1A, 0xD5, 0x55, 0x3C)
-
-
-def _planted_audio_g711(spark, sf):
-    """Planted µ-law (wFormatTag 7) mono WAVs: code byte j of doc i is
-    _G711_CODES[(i*31 + j*13) mod 8], written VERBATIM (no linear->
-    G.711 compressor exists in the repo); the oracle recomputes each
-    window's sum-of-squares from the selector formula plus the
-    spec-pinned expansion values (riko_spark/functions/wavcodec.py)."""
-    ids = _t(spark, sf, "documents").select("doc_id").filter(
-        F.col("doc_id") < _WAV_N).distinct()
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from riko_spark.functions.wavcodec import encode_wav_g711
-
-        for pdf in batches:
-            rows = []
-            codes = np.array(_G711_CODES, dtype=np.uint8)
-            for i in pdf["doc_id"]:
-                i = int(i)
-                frames = 600 + 100 * (i % 5)
-                j = np.arange(frames, dtype=np.int64)
-                sel = (i * 31 + j * 13) % 8
-                rows.append((i, bytearray(encode_wav_g711(codes[sel],
-                                                          8000))))
-            yield pd.DataFrame(rows, columns=["id", "blob"])
-
-    return ids.mapInPandas(gen, "id bigint, blob binary")
-
-
-def q_audio_features_g711(spark, sf):
-    """REAL G.711 µ-law decode + windowed loudness: companded code
-    bytes expand through the spec table and the per-256-frame
-    sum-of-squares is checked value-exactly against the oracle's CASE
-    over the eight spec-pinned linear values — a wrong segment shift,
-    bias, or sign in the expansion changes win_sumsq."""
-    from riko_spark.operators.multimodal import audio_features_op
-
-    out = audio_features_op(_planted_audio_g711(spark, sf),
-                            {"window_frames": 256})
-    return out.select(
-        "id", "sample_rate", "channels", "n_frames", "duration_ms",
-        "win_idx", "win_frames", "win_sumsq",
-    )
-
-
-def _planted_audio_float(spark, sf):
-    """Planted IEEE-float32 WAVs: sample j of doc i is k/32767 with
-    k = (i*37 + j*17) mod 2001 - 1000 — float32 carries k/32767 with
-    relative error < 2^-24, so the decoder's ×32767 half-up rounding
-    recovers k EXACTLY and the oracle recomputes every window sum from
-    the integer formula alone (riko_spark/functions/wavcodec.py)."""
-    ids = _t(spark, sf, "documents").select("doc_id").filter(
-        F.col("doc_id") < _WAV_N).distinct()
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from riko_spark.functions.wavcodec import encode_wav_float
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                ch = 1 + (i % 2)
-                frames = 500 + 100 * (i % 4)
-                j = np.arange(frames * ch, dtype=np.int64)
-                k = (i * 37 + j * 17) % 2001 - 1000
-                f = (k / 32767.0).astype(np.float32)
-                rows.append((i, bytearray(encode_wav_float(
-                    f.reshape(frames, ch), 22050))))
-            yield pd.DataFrame(rows, columns=["id", "blob"])
-
-    return ids.mapInPandas(gen, "id bigint, blob binary")
-
-
-def q_audio_features_float(spark, sf):
-    """REAL IEEE-float WAV decode (wFormatTag 3) + windowed loudness:
-    the float32 payload, fact-chunk walk and [-1,1]->int16 scaling are
-    checked value-exactly — win_sumsq is an exact int64 the oracle
-    recomputes from the planted integer formula."""
-    from riko_spark.operators.multimodal import audio_features_op
-
-    out = audio_features_op(_planted_audio_float(spark, sf),
-                            {"window_frames": 256})
-    return out.select(
-        "id", "sample_rate", "channels", "n_frames", "duration_ms",
-        "win_idx", "win_frames", "win_sumsq",
-    )
-
-
-_ADPCM_N = 16
-
-
-def _planted_audio_adpcm(spark, sf):
-    """Planted IMA ADPCM WAVs (wFormatTag 0x11): mono, ONE 44-byte
-    block per doc — header predictor (i*211) mod 1024 - 512, step
-    index (i*11) mod 89, then 320 raw 4-bit codes nib(i,j) =
-    (i*7 + j*5) mod 16 written verbatim (no linear->ADPCM compressor
-    exists in the repo).  The oracle REPLAYS the IMA step/index
-    recurrence in a recursive CTE over a spec-pinned 89-row step
-    table, so the kernel's expansion cannot self-certify
-    (riko_spark/functions/wavcodec.py)."""
-    ids = _t(spark, sf, "documents").select("doc_id").filter(
-        F.col("doc_id") < _ADPCM_N).distinct()
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from riko_spark.functions.wavcodec import encode_wav_ima
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                j = np.arange(320, dtype=np.int64)
-                nib = ((i * 7 + j * 5) % 16).astype(np.uint8)
-                pred = np.array([(i * 211) % 1024 - 512], np.int16)
-                idx = np.array([(i * 11) % 89], np.uint8)
-                rows.append((i, bytearray(encode_wav_ima(
-                    nib[None, :], pred, idx, 8000))))
-            yield pd.DataFrame(rows, columns=["id", "blob"])
-
-    return ids.mapInPandas(gen, "id bigint, blob binary")
-
-
-def q_audio_features_adpcm(spark, sf):
-    """REAL IMA ADPCM decode + windowed loudness: the 4-bit codes
-    expand through the step/index recurrence and the per-64-frame
-    sum-of-squares is checked value-exactly against a recursive-CTE
-    replay of the SAME recurrence in the oracle — a wrong step table
-    entry, clamp bound, or index adjustment diverges immediately."""
-    from riko_spark.operators.multimodal import audio_features_op
-
-    out = audio_features_op(_planted_audio_adpcm(spark, sf),
-                            {"window_frames": 64})
-    return out.select(
-        "id", "sample_rate", "channels", "n_frames", "duration_ms",
-        "win_idx", "win_frames", "win_sumsq",
-    )
-
-
-_AFP_N = 48      # 12 clusters x 4 members
-_AFP_GROUP = 4   # members per cluster
-
-
-def _planted_audio_clusters(spark, sf):
-    """Planted near-duplicate audio clusters for the acoustic
-    fingerprint: member m of cluster g (id = g*4 + m) is the SAME
-    9-sinusoid mixture — one component per fingerprint frequency band,
-    amplitudes stepping x1.5 up/down according to the bits of the
-    cluster's spectral pattern ``(g*21 + 1) % 256`` — under a uniform
-    gain (1 + m/100) and an integer-sample time shift (7*m), the
-    transforms the gradient-sign fingerprint is invariant to.  Every
-    component sits on an exact 512-sample rFFT bin (freq = bin *
-    sr/512 with sr=4096, n=4096), so band energies are concentrated
-    and the x2.25 adjacent-band energy margin dwarfs int16
-    quantization noise: members fingerprint identically (hamming 0)
-    while distinct clusters differ in >= 8 bits (8 frames x >= 1
-    differing gradient sign), outside the banded join's default
-    max_hamming=7.  Expected pairs are therefore pure id arithmetic —
-    the oracle recomputes them as id//4 equality."""
-    ids = _t(spark, sf, "documents").select("doc_id").filter(
-        F.col("doc_id") < _AFP_N).distinct()
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from riko_spark.functions.wavcodec import encode_wav
-
-        flen, n, sr = 512, 4096, 4096
-        # one exact-bin frequency centred in each of the 9 bands of
-        # the 257-bin rFFT half-spectrum
-        bins = [(257 * b) // 9 + 14 for b in range(9)]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                g, m = i // _AFP_GROUP, i % _AFP_GROUP
-                pattern = (g * 21 + 1) % 256
-                amps = [1.0]
-                for b in range(8):
-                    amps.append(amps[-1] * (1.5 if (pattern >> b) & 1
-                                            else 1 / 1.5))
-                amps = np.array(amps) * (12000.0 / sum(amps))
-                j = np.arange(n, dtype=np.float64) + 7 * m
-                s = np.zeros(n)
-                for a, k in zip(amps, bins):
-                    s += a * np.sin(2 * np.pi * k * j / flen)
-                s = np.round(s * (1 + m / 100.0)).astype(np.int16)
-                rows.append((i, bytearray(encode_wav(s.reshape(-1, 1),
-                                                     sr))))
-            yield pd.DataFrame(rows, columns=["id", "blob"])
-
-    return ids.mapInPandas(gen, "id bigint, blob binary")
-
-
-def q_audio_neardup(spark, sf):
-    """Acoustic near-dup end-to-end: Chromaprint-style spectral
-    gradient fingerprint over REAL decoded PCM -> banded bit-band
-    self-join -> exact hamming verify (the same banding machinery as
-    SimHash and image dHash).  Planted-recall oracle: the 72
-    within-cluster pairs (and nothing else) must surface with
-    hamming 0, recomputed from the planting id arithmetic."""
-    from riko_spark.operators.multimodal import audio_neardup_op
-
-    return audio_neardup_op(_planted_audio_clusters(spark, sf))
-
-
-_FLAC_N = 32
-
-
-def _planted_flac(spark, sf):
-    """Planted FLACs carrying the SAME interleaved sample formula as
-    the WAV fixtures (((i*37 + j*17) mod 2001) - 1000) so the oracle
-    recomputes every per-window sum-of-squares from the formula alone
-    — FLAC is lossless, so decode must reproduce the exact int16
-    samples.  Encoding parameters sweep the whole decoder surface:
-    subframe mode cycles fixed:0..4 / verbatim by id, Rice partition
-    order cycles 0..2, and stereo docs cycle independent / left-side /
-    right-side / mid-side decorrelation — a wrong predictor, zigzag,
-    partition split, or decorrelation formula shows up as a win_sumsq
-    mismatch (functions/flaccodec.py)."""
-    ids = _t(spark, sf, "documents").select("doc_id").filter(
-        F.col("doc_id") < _FLAC_N).distinct()
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from riko_spark.functions.flaccodec import encode_flac
-
-        modes = ["fixed:0", "fixed:1", "fixed:2", "fixed:3", "fixed:4",
-                 "verbatim"]
-        stereos = ["independent", "left_side", "right_side", "mid_side"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                rate = 8000 + 4000 * (i % 3)
-                ch = 1 + (i % 2)
-                frames = 500 + 60 * (i % 4)
-                j = np.arange(frames * ch, dtype=np.int64)
-                s = ((i * 37 + j * 17) % 2001 - 1000).astype(np.int16)
-                blob = encode_flac(
-                    s.reshape(frames, ch), rate, blocksize=256,
-                    mode=modes[i % 6], po=i % 3,
-                    stereo=stereos[(i // 2) % 4] if ch == 2
-                    else "independent")
-                rows.append((i, bytearray(blob)))
-            yield pd.DataFrame(rows, columns=["id", "blob"])
-
-    return ids.mapInPandas(gen, "id bigint, blob binary")
-
-
-def q_audio_features_flac(spark, sf):
-    """REAL FLAC decode + windowed loudness: frame headers (CRC-8),
-    FIXED/VERBATIM subframes, Rice partitions, stereo decorrelation
-    and the CRC-16 footer all sit between the planted sample formula
-    and the exact int64 win_sumsq the oracle recomputes with
-    generate_series — any decode divergence is a value mismatch."""
-    from riko_spark.operators.multimodal import audio_features_op
-
-    out = audio_features_op(_planted_flac(spark, sf),
-                            {"window_frames": 128})
-    return out.select(
-        "id", "sample_rate", "channels", "n_frames", "duration_ms",
-        "win_idx", "win_frames", "win_sumsq",
-    )
-
-
 _AVI_N = 24
 
 
@@ -2627,27 +2294,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # extract_links, link_hostgraph, sitemap_urls) —
     # then the 7 entries whose last driver-green
     # row is r05 (simplemath, dateformat, datebuilder, subelement,
-    # urlbuilder, urlparse, itembuilder), then 22 of the 44 r06-head
-    # entries so no driver row ages past 2 rounds.  Past position 50:
-    # regex_casematch, union_ragged, filter_or_block, uniq_limited,
+    # urlbuilder, urlparse, itembuilder), then 22 of the r06-head
+    # entries so no driver row ages past 2 rounds.  regex_casematch
+    # took the gate slot the deleted audio_neardup query held.  Past
+    # position 50: union_ragged, filter_or_block, uniq_limited,
     # count_group, truncate, image_features_tiff,
-    # image_features_jpeg_prog and c4_doc_filter (displaced for the
-    # thirteen new entries; siblings/compositions
-    # `regex`/`union`/`filter`/`uniq`/`count`/`sort_truncate`/
-    # `image_features_jpeg`/`corpus_pipeline` (which
-    # composes c4_doc_filter directly) keep every family in-gate,
-    # code unchanged, r06-green + this round's full
-    # check_oracle re-runs — they lead r9) and the last
-    # thirteen r06-head entries (absence_match,
-    # image_features, image_features_gif, media_metadata,
-    # audio_features, audio_features_zcr/g711/float/adpcm,
-    # video_frames, video_frames_mjpeg, video_frames_gif,
-    # frame_sample — code unchanged, re-verified via this round's
-    # full tools/check_oracle.py runs; they lead the r9 rotation,
-    # and each displaced family keeps an in-gate representative) and
-    # the
-    # remaining r07-head entries (driver-green one round ago, code
-    # unchanged, same full re-run).
+    # image_features_jpeg_prog and c4_doc_filter (siblings/compositions
+    # `union`/`filter`/`uniq`/`count`/`sort_truncate`/
+    # `image_features_jpeg`/`corpus_pipeline` (which composes
+    # c4_doc_filter directly) keep every family in-gate), the r06-head
+    # tail (absence_match, image_features, image_features_gif,
+    # media_metadata, video_frames, video_frames_mjpeg,
+    # video_frames_gif, frame_sample; each family keeps an in-gate
+    # representative) and the remaining r07-head entries (driver-green
+    # one round ago, code unchanged, re-verified by full
+    # tools/check_oracle.py runs).
     return {
         # -- code changed round 8 --
         "stream_corpus_batch": q_stream_corpus_batch,
@@ -2705,7 +2366,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_filter": q_url_filter,
         "pack_sequences": q_pack_sequences,
         "host_stats": q_host_stats,
-        "audio_neardup": q_audio_neardup,
         "sequence_match": q_sequence_match,
         # ---- past the 50-entry gate from here ----
         "regex_casematch": q_regex_casematch,
@@ -2728,11 +2388,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_features": q_image_features,
         "image_features_gif": q_image_features_gif,
         "media_metadata": q_media_metadata,
-        "audio_features": q_audio_features,
-        "audio_features_zcr": q_audio_features_zcr,
-        "audio_features_g711": q_audio_features_g711,
-        "audio_features_float": q_audio_features_float,
-        "audio_features_adpcm": q_audio_features_adpcm,
         "video_frames": q_video_frames,
         "video_frames_mjpeg": q_video_frames_mjpeg,
         "video_frames_gif": q_video_frames_gif,
@@ -2742,7 +2397,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "line_dedupe": q_line_dedupe,
         "main_content": q_main_content,
         "neardup_clusters": q_neardup_clusters,
-        "audio_features_flac": q_audio_features_flac,
         "image_features_real": q_image_features_real,
         "image_dhash": q_image_dhash,
         "sequence_match_alt": q_sequence_match_alt,
@@ -3443,254 +3097,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(w AS INT) AS width, CAST(h AS INT) AS height,
                    CAST(3 * SUM(v) AS BIGINT) AS px_sum
             FROM px GROUP BY id, f, w, h
-        """,
-        "audio_features": """
-            WITH ids AS (
-              SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 48
-            ),
-            p AS (
-              SELECT id,
-                     4000 + 2000*(id % 3) AS sample_rate,
-                     1 + (id % 2) AS channels,
-                     600 + 100*(id % 5) AS n_frames
-              FROM ids
-            ),
-            wins AS (
-              SELECT p.*, w.w AS win_idx
-              FROM p JOIN generate_series(0, 3) AS w(w)
-                ON w.w * 256 < p.n_frames
-            ),
-            s AS (
-              SELECT wn.id, wn.sample_rate, wn.channels, wn.n_frames,
-                     wn.win_idx,
-                     LEAST(wn.n_frames, (wn.win_idx + 1) * 256)
-                       - wn.win_idx * 256 AS win_frames,
-                     ((wn.id*37 + j.j*17) % 2001 - 1000) AS v
-              FROM wins wn
-              JOIN generate_series(0, 1999) AS j(j)
-                ON j.j >= wn.win_idx * 256 * wn.channels
-               AND j.j < LEAST(wn.n_frames, (wn.win_idx + 1) * 256)
-                           * wn.channels
-            )
-            SELECT id, CAST(sample_rate AS INT) AS sample_rate,
-                   CAST(channels AS INT) AS channels,
-                   CAST(n_frames AS BIGINT) AS n_frames,
-                   CAST(n_frames * 1000 // sample_rate AS BIGINT) AS duration_ms,
-                   CAST(win_idx AS INT) AS win_idx,
-                   CAST(win_frames AS INT) AS win_frames,
-                   CAST(SUM(v * v) AS BIGINT) AS win_sumsq
-            FROM s
-            GROUP BY id, sample_rate, channels, n_frames, win_idx, win_frames
-        """,
-        "audio_features_flac": """
-            WITH ids AS (
-              SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 32
-            ),
-            p AS (
-              SELECT id,
-                     8000 + 4000*(id % 3) AS sample_rate,
-                     1 + (id % 2) AS channels,
-                     500 + 60*(id % 4) AS n_frames
-              FROM ids
-            ),
-            wins AS (
-              SELECT p.*, w.w AS win_idx
-              FROM p JOIN generate_series(0, 5) AS w(w)
-                ON w.w * 128 < p.n_frames
-            ),
-            s AS (
-              SELECT wn.id, wn.sample_rate, wn.channels, wn.n_frames,
-                     wn.win_idx,
-                     LEAST(wn.n_frames, (wn.win_idx + 1) * 128)
-                       - wn.win_idx * 128 AS win_frames,
-                     ((wn.id*37 + j.j*17) % 2001 - 1000) AS v
-              FROM wins wn
-              JOIN generate_series(0, 1359) AS j(j)
-                ON j.j >= wn.win_idx * 128 * wn.channels
-               AND j.j < LEAST(wn.n_frames, (wn.win_idx + 1) * 128)
-                           * wn.channels
-            )
-            SELECT id, CAST(sample_rate AS INT) AS sample_rate,
-                   CAST(channels AS INT) AS channels,
-                   CAST(n_frames AS BIGINT) AS n_frames,
-                   CAST(n_frames * 1000 // sample_rate AS BIGINT) AS duration_ms,
-                   CAST(win_idx AS INT) AS win_idx,
-                   CAST(win_frames AS INT) AS win_frames,
-                   CAST(SUM(v * v) AS BIGINT) AS win_sumsq
-            FROM s
-            GROUP BY id, sample_rate, channels, n_frames, win_idx, win_frames
-        """,
-        "audio_features_zcr": """
-            WITH ids AS (
-              SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 48
-            ),
-            p AS (
-              SELECT id,
-                     1 + (id % 2) AS channels,
-                     600 + 100*(id % 5) AS n_frames
-              FROM ids
-            ),
-            wins AS (
-              SELECT p.*, w.w AS win_idx,
-                     LEAST(p.n_frames, (w.w + 1) * 256) - w.w * 256
-                       AS win_frames
-              FROM p JOIN generate_series(0, 3) AS w(w)
-                ON w.w * 256 < p.n_frames
-            ),
-            tr AS (
-              SELECT wn.id, wn.win_idx, wn.win_frames,
-                     ((wn.id*37 + (f.f*wn.channels + c.c)*17) % 2001
-                       - 1000) AS v,
-                     ((wn.id*37 + ((f.f-1)*wn.channels + c.c)*17) % 2001
-                       - 1000) AS vp
-              FROM wins wn
-              JOIN generate_series(1, 999) AS f(f)
-                ON f.f > wn.win_idx * 256
-               AND f.f < LEAST(wn.n_frames, (wn.win_idx + 1) * 256)
-              JOIN generate_series(0, 1) AS c(c)
-                ON c.c < wn.channels
-            )
-            SELECT id, CAST(win_idx AS INT) AS win_idx,
-                   CAST(win_frames AS INT) AS win_frames,
-                   CAST(SUM(CASE WHEN (v >= 0) <> (vp >= 0)
-                            THEN 1 ELSE 0 END) AS INT) AS win_zcr
-            FROM tr
-            GROUP BY id, win_idx, win_frames
-        """,
-        "audio_features_g711": """
-            WITH ids AS (
-              SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 48
-            ),
-            p AS (
-              SELECT id, 600 + 100*(id % 5) AS n_frames FROM ids
-            ),
-            wins AS (
-              SELECT p.*, w.w AS win_idx
-              FROM p JOIN generate_series(0, 3) AS w(w)
-                ON w.w * 256 < p.n_frames
-            ),
-            s AS (
-              SELECT wn.id, wn.n_frames, wn.win_idx,
-                     LEAST(wn.n_frames, (wn.win_idx + 1) * 256)
-                       - wn.win_idx * 256 AS win_frames,
-                     -- ITU G.711 table values for the eight planted
-                     -- u-law codes 00/80/FF/9A/1A/D5/55/3C (spec-
-                     -- pinned, independent of the engine's table)
-                     CASE (wn.id*31 + j.j*13) % 8
-                       WHEN 0 THEN -32124 WHEN 1 THEN 32124
-                       WHEN 2 THEN 0      WHEN 3 THEN 10876
-                       WHEN 4 THEN -10876 WHEN 5 THEN 716
-                       WHEN 6 THEN -716   WHEN 7 THEN -2364
-                     END AS v
-              FROM wins wn
-              JOIN generate_series(0, 999) AS j(j)
-                ON j.j >= wn.win_idx * 256
-               AND j.j < LEAST(wn.n_frames, (wn.win_idx + 1) * 256)
-            )
-            SELECT id, CAST(8000 AS INT) AS sample_rate,
-                   CAST(1 AS INT) AS channels,
-                   CAST(n_frames AS BIGINT) AS n_frames,
-                   CAST(n_frames * 1000 // 8000 AS BIGINT) AS duration_ms,
-                   CAST(win_idx AS INT) AS win_idx,
-                   CAST(win_frames AS INT) AS win_frames,
-                   CAST(SUM(v * v) AS BIGINT) AS win_sumsq
-            FROM s
-            GROUP BY id, n_frames, win_idx, win_frames
-        """,
-        "audio_features_float": """
-            WITH ids AS (
-              SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 48
-            ),
-            p AS (
-              SELECT id,
-                     1 + (id % 2) AS channels,
-                     500 + 100*(id % 4) AS n_frames
-              FROM ids
-            ),
-            wins AS (
-              SELECT p.*, w.w AS win_idx
-              FROM p JOIN generate_series(0, 3) AS w(w)
-                ON w.w * 256 < p.n_frames
-            ),
-            s AS (
-              SELECT wn.id, wn.channels, wn.n_frames, wn.win_idx,
-                     LEAST(wn.n_frames, (wn.win_idx + 1) * 256)
-                       - wn.win_idx * 256 AS win_frames,
-                     -- the planted float32 payload k/32767 decodes
-                     -- back to exactly k (relative error < 2^-24)
-                     ((wn.id*37 + j.j*17) % 2001 - 1000) AS v
-              FROM wins wn
-              JOIN generate_series(0, 1599) AS j(j)
-                ON j.j >= wn.win_idx * 256 * wn.channels
-               AND j.j < LEAST(wn.n_frames, (wn.win_idx + 1) * 256)
-                           * wn.channels
-            )
-            SELECT id, CAST(22050 AS INT) AS sample_rate,
-                   CAST(channels AS INT) AS channels,
-                   CAST(n_frames AS BIGINT) AS n_frames,
-                   CAST(n_frames * 1000 // 22050 AS BIGINT) AS duration_ms,
-                   CAST(win_idx AS INT) AS win_idx,
-                   CAST(win_frames AS INT) AS win_frames,
-                   CAST(SUM(v * v) AS BIGINT) AS win_sumsq
-            FROM s
-            GROUP BY id, channels, n_frames, win_idx, win_frames
-        """,
-        "audio_features_adpcm": """
-            WITH RECURSIVE ids AS (
-              SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 16
-            ),
-            -- the IMA quantizer step table, pinned from the published
-            -- spec values (independent of the engine's numpy table)
-            steps AS (
-              SELECT t.i AS sidx, l.l[t.i + 1] AS step
-              FROM (SELECT [7,8,9,10,11,12,13,14,16,17,19,21,23,25,28,
-                            31,34,37,41,45,50,55,60,66,73,80,88,97,107,
-                            118,130,143,157,173,190,209,230,253,279,307,
-                            337,371,408,449,494,544,598,658,724,796,876,
-                            963,1060,1166,1282,1411,1552,1707,1878,2066,
-                            2272,2499,2749,3024,3327,3660,4026,4428,4871,
-                            5358,5894,6484,7132,7845,8630,9493,10442,
-                            11487,12635,13899,15289,16818,18500,20350,
-                            22385,24623,27086,29794,32767] AS l) l,
-                   generate_series(0, 88) AS t(i)
-            ),
-            -- replay the IMA expansion recurrence: sample 0 is the
-            -- block-header predictor; nibble j yields sample j+1
-            dec(id, j, pred, sidx) AS (
-              SELECT id, 0, (id*211) % 1024 - 512, (id*11) % 89 FROM ids
-              UNION ALL
-              SELECT x.id, x.j + 1,
-                     GREATEST(-32768, LEAST(32767, x.pred
-                       + CASE WHEN x.nib >= 8 THEN -x.diff
-                              ELSE x.diff END)),
-                     GREATEST(0, LEAST(88, x.sidx
-                       + CASE x.nib % 8 WHEN 4 THEN 2 WHEN 5 THEN 4
-                              WHEN 6 THEN 6 WHEN 7 THEN 8
-                              ELSE -1 END))
-              FROM (
-                SELECT d.id, d.j, d.pred, d.sidx,
-                       (d.id*7 + d.j*5) % 16 AS nib,
-                       (s.step // 8)
-                         + CASE WHEN ((d.id*7 + d.j*5) % 16) % 8 >= 4
-                                THEN s.step ELSE 0 END
-                         + CASE WHEN ((d.id*7 + d.j*5) % 16) % 4 >= 2
-                                THEN s.step // 2 ELSE 0 END
-                         + CASE WHEN ((d.id*7 + d.j*5) % 16) % 2 = 1
-                                THEN s.step // 4 ELSE 0 END AS diff
-                FROM dec d JOIN steps s ON s.sidx = d.sidx
-                WHERE d.j < 320
-              ) x
-            )
-            SELECT id, CAST(8000 AS INT) AS sample_rate,
-                   CAST(1 AS INT) AS channels,
-                   CAST(321 AS BIGINT) AS n_frames,
-                   CAST(40 AS BIGINT) AS duration_ms,
-                   CAST(j // 64 AS INT) AS win_idx,
-                   CAST(LEAST(321, (j // 64 + 1) * 64)
-                        - (j // 64) * 64 AS INT) AS win_frames,
-                   CAST(SUM(pred * pred) AS BIGINT) AS win_sumsq
-            FROM dec
-            GROUP BY id, j // 64
         """,
         "token_totals": """
             WITH n AS (
@@ -5082,16 +4488,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(200 AS INT) AS http_status,
                    md5(text) AS payload_md5
             FROM documents WHERE doc_id < 200
-        """,
-        "audio_neardup": """
-            WITH ids AS (
-                SELECT DISTINCT doc_id AS id FROM documents
-                WHERE doc_id < 48
-            )
-            SELECT a.id AS left_id, b.id AS right_id,
-                   CAST(0 AS INT) AS hamming
-            FROM ids a JOIN ids b
-              ON a.id < b.id AND a.id // 4 = b.id // 4
         """,
         "media_metadata": """
             WITH img AS (

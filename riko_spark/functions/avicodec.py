@@ -3,11 +3,11 @@ uncompressed DIB ('00db') frame decode with stdlib ``struct``/numpy,
 plus MJPEG ('00dc' with biCompression 'MJPG') via the baseline JPEG
 kernel (functions/jpegcodec.py).
 
-Completes the media-kernel trio (imagecodec.py images, wavcodec.py
-audio): video frame sampling over AVIs whose streams are raw BI_RGB
-DIBs — the interchange shape tools emit for lossless capture — or
-Motion-JPEG — each '00dc' chunk is a standalone baseline JPEG, the
-classic capture-card/webcam interchange codec — decodes from the
+Video counterpart of imagecodec.py: frame sampling over AVIs whose
+streams are raw BI_RGB DIBs — the interchange shape tools emit for
+lossless capture — or Motion-JPEG — each '00dc' chunk is a standalone
+baseline JPEG, the classic capture-card/webcam interchange codec —
+decodes from the
 public RIFF/AVI spec (msdn AVIMAINHEADER / AVISTREAMHEADER layout)
 with no codec library.  Other compressed streams (H.264 etc., i.e.
 any other non-zero biCompression) are rejected with a clear error:

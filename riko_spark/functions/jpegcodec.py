@@ -16,8 +16,7 @@ over all blocks of a component at once (vectorized einsum — the only
 per-coefficient Python loop is the entropy decoder itself, which is
 inherently serial).
 
-The encoder exists for fixture generation (like encode_png /
-encode_wav).  It writes Annex-K-style fixed Huffman tables INTO the
+The encoder exists for fixture generation (like encode_png).  It writes Annex-K-style fixed Huffman tables INTO the
 stream as DHT segments, and the decoder builds its tables from DHT —
 never from shared constants — so encoder and decoder share no table
 state and round-trip tests are not self-certifying.  Progressive

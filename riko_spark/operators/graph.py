@@ -1,9 +1,9 @@
 """Distributed connected components — the cluster-resolution step
 between near-duplicate PAIRS (simhash_neardup / image_neardup /
-audio_neardup / minhash_lsh, operators/dedupe.py & multimodal.py) and
-an actual keep-set: transitively connected documents form one
-duplicate cluster, and the pipeline keeps one representative (the
-minimum id) per cluster.
+minhash_lsh, operators/dedupe.py & multimodal.py) and an actual
+keep-set: transitively connected documents form one duplicate
+cluster, and the pipeline keeps one representative (the minimum id)
+per cluster.
 
 Algorithm: min-label propagation with pointer-doubling shortcuts —
 each round runs (1) a neighbor-min step (every node takes the
@@ -56,8 +56,8 @@ def connected_components_op(
 
     ``stats`` (optional out-param) records ``{"rounds": k}`` after
     convergence and tags each round's Spark jobs with job group
-    ``cc-round-<k>``, so an external harness can attribute per-round
-    wall/shuffle cost (scripts/scale_compute.py ``--workload cc``)."""
+    ``cc-round-<k>``, so a caller can attribute per-round wall and
+    shuffle cost to its Spark jobs."""
     conf = conf or {}
     left_col = conf.get("left_col", left_col)
     right_col = conf.get("right_col", right_col)

@@ -1,14 +1,16 @@
-"""Multimodal columns: image/audio/video as opaque binary + metadata.
+"""Multimodal columns: images and video as opaque binary + metadata.
 
-Image (PNG/BMP) and audio (PCM WAV) decode are REAL, dependency-free
-kernels built from the public specs with stdlib ``struct``/``zlib``
-(riko_spark/functions/imagecodec.py, wavcodec.py) running inside the
-``mapInPandas`` plumbing — one Arrow batch of blobs per task, the right
-shape for batched CPU/GPU feature extraction at 100 TB.  Formats whose
-entropy coders need codec libraries this container doesn't ship
-(JPEG/MP3/H.264) fall back to a clearly-documented deterministic stub
-(images) or raise (audio/video frames); swapping in PIL/ffmpeg is a
-one-function change per modality.
+Image (PNG/BMP/GIF/TIFF/JPEG) decode is REAL, dependency-free kernels
+built from the public specs with stdlib ``struct``/``zlib``
+(riko_spark/functions/imagecodec.py and the per-format codecs it
+dispatches to) running inside the ``mapInPandas`` plumbing — one Arrow
+batch of blobs per task, the right shape for batched CPU/GPU feature
+extraction at 100 TB.  Formats whose coders need codec libraries the
+package does not depend on (arithmetic JPEG, WebP, H.264) fall back
+to a clearly-documented deterministic stub (images) or are skipped or
+raise (video frames); swapping in PIL/ffmpeg is a one-function change per
+modality.  Audio blobs are only sniffed (``media_metadata``), never
+decoded.
 """
 
 from __future__ import annotations
@@ -30,12 +32,6 @@ IMAGE_FEATURES_SCHEMA = (
     "id bigint, width int, height int, channels int, feature array<float>"
 )
 
-AUDIO_FEATURES_SCHEMA = (
-    "id bigint, sample_rate int, channels int, n_frames bigint, "
-    "duration_ms bigint, win_idx int, win_frames int, win_sumsq bigint, "
-    "win_rms float, win_zcr int"
-)
-
 FRAME_SAMPLE_SCHEMA = "id bigint, frame_idx int, frame bytes".replace("bytes", "binary")
 
 _MAGIC = {
@@ -52,21 +48,6 @@ _MAGIC = {
 #: disambiguation so the Python helper and the Spark op always agree
 _RIFF_FORMS = {b"WAVE": "audio/wav", b"AVI ": "video/avi",
                b"WEBP": "image/webp"}
-
-
-def decode_audio(b: bytes):
-    """Container dispatch for the audio ops: RIFF/WAVE -> wavcodec
-    (PCM 8/16/24/32, float, G.711, IMA ADPCM), fLaC -> flaccodec
-    (CONSTANT/VERBATIM/FIXED/LPC subframes, Rice partitions, stereo
-    decorrelation).  Returns ``(sample_rate, channels, int array
-    (frames, channels))``; unknown containers raise ValueError."""
-    if b[:4] == b"fLaC":
-        from riko_spark.functions.flaccodec import decode_flac
-
-        return decode_flac(b)
-    from riko_spark.functions.wavcodec import decode_wav
-
-    return decode_wav(b)
 
 
 def sniff_media_type(b: bytes | None) -> str:
@@ -198,60 +179,6 @@ def image_features_op(df: DataFrame, conf: dict | None = None,
             )
 
     return df.mapInPandas(run, IMAGE_FEATURES_SCHEMA)
-
-
-@register("audio_features")
-def audio_features_op(df: DataFrame, conf: dict | None = None,
-                      field: str = "blob", id_col: str = "id",
-                      window_frames: int = 1024) -> DataFrame:
-    """Audio decode (WAV or FLAC, :func:`decode_audio`) + windowed
-    loudness stats, one row per analysis window (UDTF shape: one blob
-    in → ``ceil(frames/window)`` rows out).
-
-    Real stdlib kernels (functions/wavcodec.py, flaccodec.py): sample
-    count, frame count, duration, and per-window ``sum(sample²)``
-    (exact int64 — oracle-recomputable) plus RMS.  Undecodable blobs
-    raise: compressed audio needs a codec library, and silently fake
-    loudness values would poison downstream quality filters."""
-    conf = conf or {}
-    window_frames = int(conf.get("window_frames", window_frames))
-    if window_frames < 1:
-        raise ValueError("window_frames must be >= 1")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, b in zip(pdf[id_col], pdf[field]):
-                if b is None:
-                    continue
-                rate, ch, samples = decode_audio(bytes(b))
-                frames = samples.shape[0]
-                dur_ms = frames * 1000 // rate
-                sq = samples.astype(np.int64) ** 2
-                # per-channel sign transitions between consecutive
-                # frames (zero-crossing); flips[k] = frame k -> k+1
-                signs = samples >= 0
-                flips = (signs[1:] != signs[:-1]) if frames > 1 else \
-                    np.zeros((0, ch), dtype=bool)
-                # exactly ceil(frames/window) rows: a zero-frame WAV
-                # contributes NO rows (a fabricated 0.0 loudness would
-                # poison downstream quality filters)
-                for wi in range(-(-frames // window_frames)):
-                    lo = wi * window_frames
-                    hi = min(frames, lo + window_frames)
-                    wsq = int(sq[lo:hi].sum())
-                    n = (hi - lo) * ch
-                    rms = float(np.sqrt(wsq / n))
-                    # transitions internal to the window only
-                    zcr = int(flips[lo: hi - 1].sum())
-                    rows.append((rid, rate, ch, frames, dur_ms, wi,
-                                 hi - lo, wsq, rms, zcr))
-            yield pd.DataFrame(rows, columns=[
-                "id", "sample_rate", "channels", "n_frames", "duration_ms",
-                "win_idx", "win_frames", "win_sumsq", "win_rms", "win_zcr",
-            ])
-
-    return df.mapInPandas(run, AUDIO_FEATURES_SCHEMA)
 
 
 @register("frame_sample")
@@ -505,110 +432,3 @@ def video_frames_op(df: DataFrame, conf: dict | None = None,
                 "id", "frame_idx", "width", "height", "px_sum"])
 
     return df.mapInPandas(run, VIDEO_FRAMES_SCHEMA)
-
-
-
-
-AUDIO_FP_SCHEMA = "id bigint, afp bigint"
-
-
-@register("audio_fingerprint")
-def audio_fingerprint_op(df: DataFrame, conf: dict | None = None,
-                         field: str = "blob", id_col: str = "id",
-                         frames: int = 8, bands: int = 9,
-                         on_undecodable: str = "skip") -> DataFrame:
-    """Chromaprint-style 64-bit acoustic fingerprint over REAL decoded
-    PCM (WAV or FLAC, :func:`decode_audio`): the mono downmix is cut into
-    ``frames`` equal time frames, each frame's rFFT power is summed
-    into ``bands`` equal-width frequency bands, and bit ``t*(bands-1)
-    + b`` is 1 iff ``E[t][b+1] > E[t][b]`` (spectral-gradient sign,
-    the same comparison scheme Chromaprint/AcoustID publishes).  The
-    default 8 frames x 8 band-diffs fills exactly 64 bits, so the
-    signature feeds the same banded-hamming join strategy as SimHash
-    and image dHash (operators/dedupe.py:banded_hamming_pairs).
-
-    Gradient signs are invariant to uniform gain and phase shifts —
-    the transforms a near-duplicate encode/transcode applies — while
-    any re-ordering of spectral energy flips bits.  Rectangular
-    framing (no overlap, no window) keeps the kernel deterministic and
-    exactly reproducible from the spec'd arithmetic.  Runs in
-    mapInPandas, one Arrow batch of blobs per task; undecodable blobs
-    follow ``on_undecodable``: "skip" (default) / "raise"."""
-    conf = conf or {}
-    frames = int(conf.get("frames", frames))
-    bands = int(conf.get("bands", bands))
-    on_undecodable = conf.get("on_undecodable", on_undecodable)
-    if on_undecodable not in ("skip", "raise"):
-        raise ValueError("on_undecodable must be 'skip' or 'raise'")
-    if frames * (bands - 1) > 64:
-        raise ValueError("frames * (bands-1) must fit in 64 bits")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fingerprint(samples: np.ndarray) -> int:
-            mono = samples.astype(np.float64).mean(axis=1)
-            flen = len(mono) // frames
-            if flen < 2 * bands:
-                raise ValueError(
-                    f"audio too short for {frames}x{bands} fingerprint")
-            trimmed = mono[: flen * frames].reshape(frames, flen)
-            power = np.abs(np.fft.rfft(trimmed, axis=1)) ** 2
-            nbins = power.shape[1]
-            edges = [nbins * b // bands for b in range(bands + 1)]
-            energy = np.stack(
-                [power[:, edges[b]:edges[b + 1]].sum(axis=1)
-                 for b in range(bands)], axis=1)
-            out = 0
-            for t in range(frames):
-                for b in range(bands - 1):
-                    if energy[t, b + 1] > energy[t, b]:
-                        out |= 1 << (t * (bands - 1) + b)
-            return out - (1 << 64) if out >= 1 << 63 else out
-
-        for pdf in batches:
-            rows = []
-            for rid, b in zip(pdf[id_col], pdf[field]):
-                if b is None:
-                    continue
-                try:
-                    _rate, _ch, samples = decode_audio(bytes(b))
-                    rows.append((rid, fingerprint(samples)))
-                except ValueError:
-                    if on_undecodable == "raise":
-                        raise
-                    continue
-            yield pd.DataFrame(rows, columns=["id", "afp"])
-
-    return df.mapInPandas(run, AUDIO_FP_SCHEMA)
-
-
-@register("audio_neardup")
-def audio_neardup_op(df: DataFrame, conf: dict | None = None,
-                     field: str = "blob", id_col: str = "id",
-                     bands: int = 8, max_hamming: int | None = None,
-                     max_bucket_size: int | None = 1000,
-                     on_undecodable: str = "skip") -> DataFrame:
-    """Near-duplicate AUDIO pairs end-to-end: acoustic fingerprint
-    over real decoded PCM (:func:`audio_fingerprint_op`) -> banded
-    bit-band self-join -> exact hamming verify — the third modality on
-    the shared banding machinery (text SimHash, image dHash, now
-    audio), completing corpus near-dup coverage for a multimodal
-    training pipeline.
-
-    100 TB shape is identical to image_neardup: decode + fingerprint
-    is one mapInPandas scan, candidate generation is ONE shuffle keyed
-    on (band, band-bits) with pigeonhole recall for hamming <=
-    bands-1, frequent buckets (silence hashes alike) are capped with
-    non-silent drop accounting, and verification is a JVM bit_count on
-    candidates only."""
-    conf = conf or {}
-    from riko_spark.operators.dedupe import banded_hamming_pairs
-
-    sig = audio_fingerprint_op(df, conf, field=field, id_col=id_col,
-                               on_undecodable=on_undecodable)
-    return banded_hamming_pairs(
-        sig, "afp", id_col="id",
-        bands=int(conf.get("bands", bands)),
-        max_hamming=conf.get("max_hamming", max_hamming),
-        max_bucket_size=conf.get("max_bucket_size", max_bucket_size),
-        log_dropped=bool(conf.get("log_dropped", True)),
-        what="audio_neardup")

@@ -271,8 +271,12 @@ class UpsertSink:
             ])
             rel = self._part_rel(gen_name, p)
             os.makedirs(os.path.join(self.path, rel))
+            # store_schema=False: the parquet schema alone reads back
+            # the same types; large_string/large_binary come back as
+            # string/binary, which the permissive concat promotes
             pq.write_table(data.filter(mask),
-                           os.path.join(self.path, rel, "part-00000.parquet"))
+                           os.path.join(self.path, rel, "part-00000.parquet"),
+                           store_schema=False)
             mf[p] = rel
         self._commit_manifest(mf)
         self._gc(mf)

@@ -1,12 +1,12 @@
-"""Stream-sizing helpers: pick state width and provider for a query.
+"""State-store provider selection for stateful streams.
 
-A stateful stream's shuffle width fixes its state-store partition count
-for the query's LIFETIME (it is captured in the checkpoint at first
-start), so it must be sized to STATE volume, not to input volume — the
-map side (scan + extraction) gets its parallelism from file splits and
-is unaffected.  Oversizing costs per-batch task launch + state commit
-overhead on every micro-batch forever; these helpers make the choice
-explicit and reversible.
+A stateful stream's shuffle width and state-store provider are both
+captured in the checkpoint at first start and kept for the query's
+LIFETIME, so they are chosen before ``writeStream.start()``.  Width
+should follow STATE volume, not input volume: the map side (scan +
+extraction) gets its parallelism from file splits, while every extra
+state partition costs task launch + state commit on each micro-batch.
+:func:`configure_state_store` sets the provider by alias.
 
 Provider guidance (both checkpointed, both exactly-once):
 
@@ -20,8 +20,6 @@ Provider guidance (both checkpointed, both exactly-once):
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -67,32 +65,3 @@ def configure_state_store(spark: SparkSession, provider: str | None) -> str | No
     spark.conf.set(STATE_STORE_CONF, cls)
     return cls
 
-
-@contextmanager
-def stream_conf(
-    spark: SparkSession,
-    shuffle_partitions: int = 8,
-    small_state: bool = True,
-):
-    """Context manager: size the NEXT stream start, restore after.
-
-    The confs are captured when ``writeStream.start()`` runs inside the
-    block; restoring afterwards does not affect the running query.
-
-    >>> with stream_conf(spark, shuffle_partitions=8):
-    ...     q = write_stream_upsert(agg, sink, ckpt)      # doctest: +SKIP
-    """
-    keys = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.streaming.stateStore.providerClass": (
-            HDFS_PROVIDER if small_state else ROCKSDB_PROVIDER
-        ),
-    }
-    old = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield spark
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)

@@ -13,7 +13,7 @@ Reported per variant:
   * rows INTO the stateful exchange (the ``neardup_post_local``
     observation — the plan-level ground truth for shuffled rows)
   * total shuffleWriteBytes / shuffleWriteRecords across the drain's
-    stages (UI REST API, same source as scale_compute's CC metrics)
+    stages (from the Spark UI REST API)
   * wall seconds, docs/sec, output rows (must be IDENTICAL across
     variants — the collapse must not change the result)
 

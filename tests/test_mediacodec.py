@@ -1,6 +1,6 @@
 """Real media kernels: PNG/BMP decode against hand-assembled files
-(independent filter application, not the encoder), WAV decode against
-hand-packed RIFF bytes, and the Spark ops end-to-end."""
+(independent filter application, not the encoder), AVI frame walks
+against hand-packed RIFF bytes, and the Spark ops end-to-end."""
 
 import struct
 import zlib
@@ -16,7 +16,6 @@ from riko_spark.functions.imagecodec import (
     encode_bmp,
     encode_png,
 )
-from riko_spark.functions.wavcodec import decode_wav, encode_wav
 
 
 def _chunk(tag, body):
@@ -169,60 +168,6 @@ def test_bmp_roundtrip_and_dispatch():
         decode_image(b"GIF89a not a real gif")
 
 
-def test_wav_decode_hand_built_with_list_chunk():
-    """Hand-packed RIFF: fmt, a LIST chunk the walker must skip (odd
-    size -> pad byte), then data.  16-bit stereo."""
-    frames = np.array([[100, -100], [2000, -2000], [32767, -32768]],
-                      dtype="<i2")
-    data = frames.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
-    lst = b"INFOods"  # 7 bytes -> odd, needs pad
-    body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"LIST" + struct.pack("<I", len(lst)) + lst + b"\0"
-            + b"data" + struct.pack("<I", len(data)) + data)
-    rate, ch, got = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-    assert (rate, ch) == (8000, 2)
-    np.testing.assert_array_equal(got, frames)
-
-
-def test_wav_8bit_and_extensible():
-    # 8-bit unsigned PCM recentres around 128
-    raw = bytes([128, 129, 127, 255, 0])
-    fmt = struct.pack("<HHIIHH", 1, 1, 4000, 4000, 1, 8)
-    body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(raw)) + raw)
-    rate, ch, got = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-    assert (rate, ch) == (4000, 1)
-    np.testing.assert_array_equal(
-        got[:, 0], (np.array([0, 1, -1, 127, -128], dtype=np.int16) << 8))
-
-    # WAVE_FORMAT_EXTENSIBLE with PCM GUID decodes; non-PCM GUID raises
-    frames = np.array([1, 2, 3], dtype="<i2")
-    guid_pcm = b"\x01\x00\x00\x00" + b"\x00" * 12
-    ext = struct.pack("<HHIIHHHHI", 0xFFFE, 1, 8000, 16000, 2, 16, 22,
-                      16, 0x4) + guid_pcm
-    body = (b"WAVEfmt " + struct.pack("<I", len(ext)) + ext
-            + b"data" + struct.pack("<I", 6) + frames.tobytes())
-    assert decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)[0] == 8000
-
-    bad = bytearray(ext)
-    bad[24] = 2  # ADPCM subformat
-    body = (b"WAVEfmt " + struct.pack("<I", len(bad)) + bytes(bad)
-            + b"data" + struct.pack("<I", 6) + frames.tobytes())
-    with pytest.raises(ValueError, match="neither PCM nor IEEE float"):
-        decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-
-def test_wav_roundtrip_and_rejects():
-    rng = np.random.RandomState(11)
-    frames = rng.randint(-32768, 32767, size=(500, 2)).astype("<i2")
-    rate, ch, got = decode_wav(encode_wav(frames, 16000))
-    assert (rate, ch) == (16000, 2)
-    np.testing.assert_array_equal(got, frames)
-    with pytest.raises(ValueError, match="RIFF"):
-        decode_wav(b"ID3\x03mp3 junk padding padding")
-
-
 # ------------------------------------------------------- Spark ops e2e
 
 def test_image_features_op_real_decode(spark):
@@ -245,25 +190,6 @@ def test_image_features_op_real_decode(spark):
 
     skipped = image_features_op(df, {"on_undecodable": "skip"}).collect()
     assert sorted(r["id"] for r in skipped) == [1, 2]
-
-
-def test_audio_features_op_windows(spark):
-    from riko_spark.operators.multimodal import audio_features_op
-
-    frames = np.arange(-1200, 1200, dtype=np.int16).reshape(-1, 2)  # 1200 frames
-    blob = bytearray(encode_wav(frames, 8000))
-    df = spark.createDataFrame([(7, blob)], "id long, blob binary")
-    rows = sorted(audio_features_op(df, {"window_frames": 500}).collect(),
-                  key=lambda r: r["win_idx"])
-    assert len(rows) == 3  # 500 + 500 + 200
-    assert [r["win_frames"] for r in rows] == [500, 500, 200]
-    r0 = rows[0]
-    assert (r0["sample_rate"], r0["channels"], r0["n_frames"]) == (8000, 2, 1200)
-    assert r0["duration_ms"] == 150
-    sq = frames.astype(np.int64) ** 2
-    for r, (lo, hi) in zip(rows, [(0, 500), (500, 1000), (1000, 1200)]):
-        assert r["win_sumsq"] == int(sq[lo:hi].sum())
-        assert abs(r["win_rms"] - float(np.sqrt(r["win_sumsq"] / ((hi - lo) * 2)))) < 1e-3
 
 
 def test_png_palette_decode():
@@ -328,20 +254,6 @@ def test_image_features_corrupt_blob_falls_back_not_aborts(spark):
     assert out[3]["channels"] == 1  # real decode still works
     skipped = image_features_op(df, {"on_undecodable": "skip"}).collect()
     assert [r["id"] for r in skipped] == [3]
-
-
-def test_audio_features_zero_frame_wav_emits_no_rows(spark):
-    """Review regression: an empty data chunk yields ceil(0/w)=0 rows,
-    never a fabricated 0.0-loudness window."""
-    from riko_spark.operators.multimodal import audio_features_op
-
-    empty = encode_wav(np.zeros((0, 1), dtype=np.int16), 8000)
-    real = encode_wav(np.ones((10, 1), dtype=np.int16) * 3, 8000)
-    df = spark.createDataFrame(
-        [(1, bytearray(empty)), (2, bytearray(real))], "id long, blob binary")
-    rows = audio_features_op(df, {"window_frames": 4}).collect()
-    assert sorted(r["id"] for r in rows) == [2, 2, 2]  # 4+4+2 frames
-    assert all(r["win_sumsq"] in (36, 18) for r in rows)
 
 
 def test_sniff_media_type_riff_forms():
@@ -761,261 +673,3 @@ def test_frame_sample_mjpeg_payloads(spark):
         w, h, c, px = decode_jpeg(bytes(r["frame"]))
         assert (w, h, c) == (24, 16, 1)
         np.testing.assert_array_equal(px[:, :, 0], frames[r["frame_idx"]])
-
-
-# ------------------------------------------------------------ G.711 WAV
-
-def _g711_expand_scalar(code, law):
-    """Independent per-sample G.711 expansion written from the ITU
-    spec text (segmented companding), NOT the codec's vectorized
-    table build — loop/branch structure, no numpy."""
-    if law == "ulaw":
-        u = (~code) & 0xFF
-        seg = (u >> 4) & 0x07
-        quant = u & 0x0F
-        mag = (((quant << 3) + 0x84) << seg) - 0x84
-        return -mag if u & 0x80 else mag
-    a = code ^ 0x55
-    seg = (a >> 4) & 0x07
-    quant = a & 0x0F
-    if seg == 0:
-        mag = (quant << 4) + 8
-    elif seg == 1:
-        mag = (quant << 4) + 0x108
-    else:
-        mag = ((quant << 4) + 0x108) << (seg - 1)
-    return mag if a & 0x80 else -mag
-
-
-def test_g711_tables_spec_values_and_full_sweep():
-    from riko_spark.functions.wavcodec import _ALAW_TABLE, _ULAW_TABLE
-
-    # spec-pinned spot values (G.711 tables 1a/2a endpoints)
-    assert _ULAW_TABLE[0x00] == -32124 and _ULAW_TABLE[0x80] == 32124
-    assert _ULAW_TABLE[0xFF] == 0 and _ULAW_TABLE[0x7F] == 0
-    assert _ALAW_TABLE[0x55] == -8 and _ALAW_TABLE[0xD5] == 8
-    assert _ALAW_TABLE[0x2A] == -32256 and _ALAW_TABLE[0xAA] == 32256
-    # full 256-code sweep against the independent scalar expansion
-    for c in range(256):
-        assert _ULAW_TABLE[c] == _g711_expand_scalar(c, "ulaw"), hex(c)
-        assert _ALAW_TABLE[c] == _g711_expand_scalar(c, "alaw"), hex(c)
-    # each positive half is monotone in code order (companding is
-    # order-preserving) and mirrors the negative half exactly
-    ut = _ULAW_TABLE.astype(int)
-    assert all(ut[0x80 + i] >= ut[0x80 + i + 1] for i in range(127))
-    assert all(ut[i] == -ut[0x80 + i] for i in range(128))
-
-
-def test_g711_wav_decode_roundtrip_and_rejects():
-    from riko_spark.functions.wavcodec import decode_wav, encode_wav_g711
-
-    codes = np.array([[0x00, 0xFF], [0x80, 0x7F], [0x9A, 0x2A]], np.uint8)
-    rate, ch, s = decode_wav(encode_wav_g711(codes, 8000, "ulaw"))
-    assert (rate, ch, s.shape) == (8000, 2, (3, 2))
-    expect = [[_g711_expand_scalar(int(c), "ulaw") for c in row]
-              for row in codes]
-    assert s.tolist() == expect
-
-    rate, ch, s = decode_wav(encode_wav_g711(codes[:, 0], 16000, "alaw"))
-    assert (rate, ch) == (16000, 1)
-    assert s[:, 0].tolist() == [
-        _g711_expand_scalar(int(c), "alaw") for c in codes[:, 0]]
-
-    # G.711 fmt with a non-8 bit depth is corrupt -> clean error
-    blob = bytearray(encode_wav_g711(codes[:, 0], 8000, "ulaw"))
-    i = bytes(blob).index(b"fmt ")
-    struct.pack_into("<H", blob, i + 8 + 14, 16)  # wBitsPerSample
-    with pytest.raises(ValueError, match="8-bit"):
-        decode_wav(bytes(blob))
-    with pytest.raises(ValueError):
-        encode_wav_g711(codes, 8000, "g722")
-
-
-def test_audio_features_g711(spark):
-    """audio_features over a µ-law WAV: windowed sum-of-squares of the
-    EXPANDED samples, expectation built from the independent scalar
-    expansion."""
-    from riko_spark.functions.wavcodec import encode_wav_g711
-    from riko_spark.operators.multimodal import audio_features_op
-
-    codes = np.array([0x00, 0xFF, 0x80, 0x55, 0xD5, 0x2A], np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_wav_g711(codes, 8000, "ulaw")))],
-        "id long, blob binary")
-    rows = sorted(audio_features_op(df, {"window_frames": 4}).collect(),
-                  key=lambda r: r["win_idx"])
-    lin = [_g711_expand_scalar(int(c), "ulaw") for c in codes]
-    assert [r["win_frames"] for r in rows] == [4, 2]
-    assert rows[0]["win_sumsq"] == sum(v * v for v in lin[:4])
-    assert rows[1]["win_sumsq"] == sum(v * v for v in lin[4:])
-    assert rows[0]["sample_rate"] == 8000 and rows[0]["channels"] == 1
-
-
-# -------------------------------------- float / wide-PCM / IMA ADPCM WAV
-
-def test_wav_float_exact_and_clip():
-    from riko_spark.functions.wavcodec import decode_wav, encode_wav_float
-
-    # values k/32767 survive the float32 round-trip exactly: the
-    # decoder's x*32767 half-up rounding must recover k
-    k = np.array([[0, 32767], [-32767, 1], [-12345, 6789]], np.int64)
-    f = (k / 32767.0).astype(np.float32)
-    rate, ch, s = decode_wav(encode_wav_float(f, 44100))
-    assert (rate, ch) == (44100, 2)
-    assert s.tolist() == k.tolist()
-    # float64 path
-    rate, ch, s = decode_wav(encode_wav_float(k[:, 0] / 32767.0, 8000,
-                                              double=True))
-    assert ch == 1 and s[:, 0].tolist() == k[:, 0].tolist()
-    # out-of-range samples clamp to full scale, NaN-free contract not
-    # required by spec but +/-2.0 must pin to the rails
-    rate, _, s = decode_wav(encode_wav_float(
-        np.array([2.0, -2.0, 0.5], np.float32), 8000))
-    assert s[:, 0].tolist() == [32767, -32767, 16384]
-
-
-def test_wav_float_extensible_guid():
-    from riko_spark.functions.wavcodec import decode_wav
-
-    f = np.array([0.25, -0.5], "<f4")
-    data = f.tobytes()
-    fmt = struct.pack("<HHIIHHHHI", 0xFFFE, 1, 8000, 32000, 4, 32, 22,
-                      32, 0x4) + b"\x03\x00\x00\x00" + b"\x00" * 12
-    body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    rate, ch, s = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-    assert s[:, 0].tolist() == [8192, -16383 - 1 + 1]  # floor(-.5*32767+.5)
-    # an EXTENSIBLE GUID that is neither PCM nor float is rejected
-    bad = bytearray(b"RIFF" + struct.pack("<I", len(body)) + body)
-    i = bytes(bad).index(b"fmt ") + 8 + 24
-    bad[i:i + 4] = b"\x07\x00\x00\x00"
-    with pytest.raises(ValueError, match="neither PCM nor IEEE float"):
-        decode_wav(bytes(bad))
-
-
-def test_wav_24_and_32_bit_pcm():
-    from riko_spark.functions.wavcodec import decode_wav, encode_wav_wide
-
-    # 24-bit: planted k<<8 decodes to exactly k (top-16 contract)
-    k = np.array([[1, -1], [32767, -32768], [4660, -292]], np.int64)
-    rate, ch, s = decode_wav(encode_wav_wide((k << 8).astype(np.int32),
-                                             48000, bits=24))
-    assert (rate, ch) == (48000, 2)
-    assert s.tolist() == k.tolist()
-    # 32-bit: planted k<<16 decodes to exactly k
-    rate, ch, s = decode_wav(encode_wav_wide((k << 16).astype(np.int32),
-                                             48000, bits=32))
-    assert s.tolist() == k.tolist()
-    # 24-bit sign boundary: 0x800000 is the most negative value
-    blob = bytearray(encode_wav_wide(np.array([-(1 << 23)], np.int32),
-                                     8000, bits=24))
-    _, _, s = decode_wav(bytes(blob))
-    assert s[0, 0] == -32768
-    with pytest.raises(ValueError):
-        encode_wav_wide(k.astype(np.int32), 8000, bits=20)
-
-
-def _ima_decode_scalar(nibbles, predictor, index):
-    """Independent per-sample IMA ADPCM expansion written from the IMA
-    recommended-practices text: branchy scalar loop, no numpy, no
-    shared tables — the step table is rebuilt here from the published
-    values list typed independently of the codec module."""
-    steps = [7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28,
-             31, 34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107,
-             118, 130, 143, 157, 173, 190, 209, 230, 253, 279, 307,
-             337, 371, 408, 449, 494, 544, 598, 658, 724, 796, 876,
-             963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066, 2272,
-             2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358,
-             5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635,
-             13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
-             29794, 32767]
-    out = [predictor]
-    for n in nibbles:
-        step = steps[index]
-        diff = step >> 3
-        if n & 1:
-            diff += step >> 2
-        if n & 2:
-            diff += step >> 1
-        if n & 4:
-            diff += step
-        predictor = predictor - diff if n & 8 else predictor + diff
-        predictor = max(-32768, min(32767, predictor))
-        index += [-1, -1, -1, -1, 2, 4, 6, 8][n & 7]
-        index = max(0, min(88, index))
-        out.append(predictor)
-    return out
-
-
-def test_ima_step_table_growth_property():
-    from riko_spark.functions.wavcodec import _IMA_STEP_TABLE
-
-    t = _IMA_STEP_TABLE.astype(float)
-    assert t[0] == 7 and t[88] == 32767
-    # each entry is ~1.1x the previous (the IMA design rule); a
-    # transposed digit breaks the ratio band immediately
-    ratios = t[1:] / t[:-1]
-    assert ratios.min() > 1.03 and ratios.max() < 1.18
-
-
-def test_ima_adpcm_mono_roundtrip_vs_scalar():
-    from riko_spark.functions.wavcodec import decode_wav, encode_wav_ima
-
-    rng = np.random.default_rng(7)
-    nib = rng.integers(0, 16, size=(3, 24), dtype=np.uint8)
-    preds = np.array([0, -30000, 25000], np.int16)
-    idxs = np.array([0, 44, 88], np.uint8)
-    rate, ch, s = decode_wav(encode_wav_ima(nib, preds, idxs, 8000))
-    assert (rate, ch) == (8000, 1)
-    assert s.shape == (3 * 25, 1)
-    expect = []
-    for b in range(3):
-        expect += _ima_decode_scalar(nib[b].tolist(), int(preds[b]),
-                                     int(idxs[b]))
-    assert s[:, 0].tolist() == expect
-
-
-def test_ima_adpcm_stereo_hand_built_and_fact_trim():
-    from riko_spark.functions.wavcodec import decode_wav
-
-    # one stereo block, hand-assembled: per-channel 4-byte headers then
-    # alternating 4-byte words (8 nibbles each, low nibble first)
-    nib_l = [4, 0, 12, 2, 9, 1, 15, 7]
-    nib_r = [8, 8, 3, 3, 0, 5, 10, 6]
-    hdr = struct.pack("<hBB", 100, 2, 0) + struct.pack("<hBB", -100, 10, 0)
-    pack = lambda ns: bytes(
-        ns[i] | (ns[i + 1] << 4) for i in range(0, len(ns), 2))
-    data = hdr + pack(nib_l) + pack(nib_r)
-    balign = len(data)
-    fmt = struct.pack("<HHIIHHHH", 0x11, 2, 8000,
-                      8000 * balign // 9, balign, 4, 2, 9)
-    body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<II", 4, 7)  # trim to 7 frames
-            + b"data" + struct.pack("<I", len(data)) + data)
-    rate, ch, s = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-    assert (rate, ch) == (8000, 2)
-    assert s.shape == (7, 2)  # fact chunk trims the 9 decoded frames
-    assert s[:, 0].tolist() == _ima_decode_scalar(nib_l, 100, 2)[:7]
-    assert s[:, 1].tolist() == _ima_decode_scalar(nib_r, -100, 10)[:7]
-
-
-def test_ima_adpcm_rejects():
-    from riko_spark.functions.wavcodec import decode_wav, encode_wav_ima
-
-    nib = np.zeros((1, 8), np.uint8)
-    blob = bytearray(encode_wav_ima(nib, np.array([0], np.int16),
-                                    np.array([0], np.uint8), 8000))
-    i = bytes(blob).index(b"fmt ")
-    struct.pack_into("<H", blob, i + 8 + 14, 16)  # wBitsPerSample
-    with pytest.raises(ValueError, match="4-bit"):
-        decode_wav(bytes(blob))
-    with pytest.raises(ValueError, match="8k"):
-        encode_wav_ima(np.zeros((1, 7), np.uint8),
-                       np.array([0], np.int16),
-                       np.array([0], np.uint8), 8000)
-    # MS ADPCM (format 2) still rejects with the clear library message
-    fmt = struct.pack("<HHIIHH", 2, 1, 8000, 4000, 256, 4)
-    body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", 4) + b"\x00" * 4)
-    with pytest.raises(ValueError, match="transform codecs"):
-        decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)

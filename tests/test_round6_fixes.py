@@ -9,8 +9,6 @@
    ``__comp IS NOT NULL`` filter does (NaT would become INT64_MIN).
 3. parse_jpeg_dims handles 0xFF fill bytes before a marker (T.81
    B.1.1.2) instead of misreading a bogus segment length.
-4. decode_wav rejects a zero sample rate instead of letting duration
-   math divide by zero downstream.
 """
 
 import datetime as dt
@@ -127,15 +125,3 @@ def test_jpeg_dims_with_fill_bytes():
             + struct.pack(">BHHB", 8, 31, 45, 3) + b"\x01\x11\x00")
     blob = b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
     assert parse_jpeg_dims(blob) == (45, 31, 3)
-
-
-def test_wav_zero_sample_rate_rejected():
-    from riko_spark.functions.wavcodec import decode_wav, encode_wav
-
-    good = encode_wav(np.zeros(8, dtype=np.int16), 8000)
-    # patch nSamplesPerSec (offset 24 in the canonical fmt layout) to 0
-    i = good.index(b"fmt ")
-    rate_off = i + 8 + 4
-    bad = good[:rate_off] + b"\x00\x00\x00\x00" + good[rate_off + 4:]
-    with pytest.raises(ValueError, match="sample rate"):
-        decode_wav(bad)

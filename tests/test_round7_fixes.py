@@ -7,13 +7,9 @@ line_dedupe boilerplate-proportional rewrite (VERDICT r6 ask #1).
   line text.
 * main_content_op: the id column keeps its input name AND type
   (ADVICE cleaning.py:378).
-* decode_flac: STREAMINFO total_samples == 0 means UNKNOWN (RFC 9639
-  §8.2), so frames must still decode (ADVICE flaccodec.py:383).
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 from tests.conftest import rows
 
@@ -86,21 +82,3 @@ def test_main_content_custom_id_col_and_type(spark):
     # string id survives with its own name/type; NULL html rows drop
     assert [r["url"] for r in out] == ["u-1"]
     assert out[0]["main_text"] == "Body text of the page here."
-
-
-def test_decode_flac_unknown_total_samples_decodes_frames():
-    from riko_spark.functions.flaccodec import decode_flac, encode_flac
-
-    sig = (np.arange(2000, dtype=np.int64) % 97 - 48).reshape(-1, 1)
-    blob = bytearray(encode_flac(sig.astype(np.int16), 8000,
-                                 mode="fixed:1", blocksize=512))
-    rate, ch, ref = decode_flac(bytes(blob))
-    assert ref.shape == (2000, 1)
-    # zero the 36-bit total_samples field (STREAMINFO body[10:18] ->
-    # file bytes 18..26; total = low 36 bits): low nibble of byte 21
-    # plus bytes 22-25
-    blob[21] &= 0xF0
-    blob[22:26] = b"\x00\x00\x00\x00"
-    rate2, ch2, got = decode_flac(bytes(blob))
-    assert (rate2, ch2) == (rate, ch)
-    assert np.array_equal(got, ref)

@@ -310,22 +310,6 @@ def test_declared_pipe_graph_stream_batch_parity(spark, tmp_path, pages_path):
     assert _bag(sink.result(spark)) == _bag(expected)
 
 
-def test_stream_conf_context(spark):
-    """stream_conf sets state-sizing confs inside the block and restores
-    them after (running queries keep their captured values)."""
-    from riko_spark.streaming.tuning import HDFS_PROVIDER, stream_conf
-
-    before_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    before_prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    with stream_conf(spark, shuffle_partitions=5, small_state=True):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
-        assert spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass") == HDFS_PROVIDER
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before_sp
-    assert spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass") == before_prov
-
-
 def test_sink_day_partition_pruning(spark, tmp_path):
     """With day_col the layout mirrors the north rule's Iceberg spec
     (days(ts) x bucket(N, key)): a batch touching only day 2 leaves

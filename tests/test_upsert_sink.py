@@ -1,10 +1,12 @@
-"""UpsertSink merge path: the Spark job budget of one sink call, and
+"""UpsertSink merge path: the Spark job budget of one sink call,
 merging onto a table whose generations Spark's own parquet writer made
-(the layout the sink wrote before its merge moved to Arrow)."""
+(the layout the sink wrote before its merge moved to Arrow), and the
+column types its own parquet files round-trip."""
 
 import datetime as dt
 import os
 import uuid
+from decimal import Decimal
 
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
@@ -101,3 +103,38 @@ def test_sink_merges_onto_spark_written_generation(spark, tmp_path):
         "b": {"k": "b", "ts": None, "v": 20, "st": None},
         "c": {"k": "c", "ts": d2, "v": 3, "st": {"a": 2, "t": None}},
     }
+
+
+def test_sink_round_trips_column_types(spark, tmp_path):
+    """The sink writes parquet without the serialized Arrow schema, so
+    types come back from the parquet schema alone: each one survives a
+    second merge over the committed rows and reads back as written
+    through ``read()`` and ``result()``, nulls included."""
+    path = str(tmp_path / "sink")
+    sink = UpsertSink(path, keys=["k"], num_buckets=2)
+    schema = ("k int, s string, ts timestamp, tn timestamp_ntz, d date, "
+              "dec decimal(38,18), b binary, arr array<string>, "
+              "m map<string,int>, st struct<a:int,t:timestamp>, x double, f boolean")
+
+    def row(k, v):
+        return (k, f"s{v}", dt.datetime(2024, 3, 1, v), dt.datetime(2024, 3, 2, v),
+                dt.date(2024, 3, v), Decimal(f"{v}.000000000000000001"),
+                bytes([v, 0, 255]), [f"a{v}", None], {"m": v, "n": None},
+                (v, dt.datetime(2024, 1, 1, v)), v + 0.5, v % 2 == 0)
+
+    null = (3,) + (None,) * 11
+    sink(spark.createDataFrame([row(1, 1), row(2, 2), null], schema), 0)
+    sink(spark.createDataFrame([row(2, 7), row(4, 4)], schema), 1)
+
+    files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+             if f.endswith(".parquet")]
+    assert files
+    assert all(b"ARROW:schema" not in (pq.read_metadata(f).metadata or {})
+               for f in files)
+    assert {r["k"]: r["__batch_id"] for r in sink.read(spark).collect()} == {
+        1: 0, 2: 1, 3: 0, 4: 1}
+    out = sink.result(spark)
+    assert out.schema.simpleString() == \
+        spark.createDataFrame([], schema).schema.simpleString()
+    assert {r["k"]: tuple(r) for r in out.collect()} == {
+        1: row(1, 1), 2: row(2, 7), 3: null, 4: row(4, 4)}
