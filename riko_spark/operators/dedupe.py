@@ -174,11 +174,14 @@ def _poll_pending() -> None:
             with _PENDING_LOCK:
                 batch = list(_PENDING)
             now = time.monotonic()
+            # keyed by id(): a weakref whose referent died before its
+            # hash was taken cannot be hashed at all.  The ids are
+            # stable because _PENDING still holds the refs.
             drained = set()
             for ref, born in batch:
                 stats = ref()
                 if stats is None:
-                    drained.add(ref)  # slot overwritten / collected
+                    drained.add(id(ref))  # slot overwritten / collected
                     continue
                 # py4j readiness checks run OUTSIDE the lock
                 if stats._try_drain():
@@ -186,11 +189,11 @@ def _poll_pending() -> None:
                         _warn_drops(stats)
                     except Exception:  # noqa: BLE001 — warnings-as-errors
                         pass  # the drop counts stay queryable via .get
-                    drained.add(ref)
+                    drained.add(id(ref))
                 elif now - born > _WATCH_MAX_AGE_S:
-                    drained.add(ref)  # built-but-never-run: stop babysitting
+                    drained.add(id(ref))  # built-but-never-run: stop babysitting
             with _PENDING_LOCK:
-                _PENDING[:] = [e for e in _PENDING if e[0] not in drained]
+                _PENDING[:] = [e for e in _PENDING if id(e[0]) not in drained]
                 if not _PENDING:
                     _release_if_mine()
                     return

@@ -60,13 +60,13 @@ def clean_corpus(
     within the watermark horizon; arbitrary-but-one in batch).
 
     ``conf`` forwards to the C4/Gopher gate (``min_words`` etc.), and
-    its ``blocked_domains`` / ``dedupe_mode`` / ``watermark`` /
-    ``pre_dedupe`` keys override the keyword defaults — the same
-    conf-over-kwargs layering every operator in the engine uses.
-    ``pre_dedupe`` (default on) is the per-partition local collapse
-    before the dedupe's stateful exchange; disable it for streams
-    known to be duplication-free, where its Arrow pass buys nothing
-    (scripts/prededupe_exp.py measures both regimes)."""
+    its ``blocked_domains`` / ``dedupe_mode`` / ``watermark`` keys
+    override the keyword defaults — the same conf-over-kwargs layering
+    every operator in the engine uses.  On a streaming frame the dedupe
+    always collapses each key per partition before its stateful
+    exchange.  The collapse never changes the output; BASELINE.md
+    records its row cut on duplicated streams and its few-percent
+    toll on all-unique ones."""
     from riko_spark.operators.cleaning import (
         c4_doc_filter_op,
         main_content_op,
@@ -78,7 +78,6 @@ def clean_corpus(
     blocked_domains = list(conf.get("blocked_domains", blocked_domains))
     dedupe_mode = conf.get("dedupe_mode", dedupe_mode)
     watermark = conf.get("watermark", watermark)
-    pre_dedupe = bool(conf.get("pre_dedupe", True))
 
     docs = records.filter(F.col("payload").isNotNull()).select(
         F.col("warc_target_uri").alias("url"),
@@ -94,7 +93,7 @@ def clean_corpus(
     gated = c4_doc_filter_op(main, conf).filter("keep")
     deduped = neardup_dedupe_within_watermark(
         gated, field="text", ts_col="warc_ts", delay=watermark,
-        mode=dedupe_mode, pre_dedupe=pre_dedupe)
+        mode=dedupe_mode)
     return deduped.select("url", "warc_ts", "text", "n_words",
                           "n_sentences")
 

@@ -109,7 +109,6 @@ def neardup_dedupe_within_watermark(
     ts_col: str = "warc_ts",
     delay: str = "30 seconds",
     mode: str = "exact",
-    pre_dedupe: bool = True,
     observe_reduction: bool = False,
 ) -> DataFrame:
     """CONTENT near-dup dedupe for a streaming corpus pipeline: derive
@@ -137,7 +136,7 @@ def neardup_dedupe_within_watermark(
     stream ≡ batch parity is testable by replaying the same files.
     The key column is internal and dropped from the output.
 
-    ``pre_dedupe`` (streaming only; default on) inserts
+    Streaming input always passes through
     :func:`_partition_local_dedupe` between the key projection and
     the stateful exchange, so hot duplicated keys shuffle once per
     partition per micro-batch instead of once per copy — the streaming
@@ -166,8 +165,7 @@ def neardup_dedupe_within_watermark(
         if observe_reduction:
             keyed = keyed.observe(
                 "neardup_pre_local", F.count(F.lit(1)).alias("rows"))
-        if pre_dedupe:
-            keyed = _partition_local_dedupe(keyed, "__ndk", ts_col)
+        keyed = _partition_local_dedupe(keyed, "__ndk", ts_col)
         if observe_reduction:
             keyed = keyed.observe(
                 "neardup_post_local", F.count(F.lit(1)).alias("rows"))

@@ -159,3 +159,37 @@ def test_cli_crawl_stream_requires_checkpoint(tmp_path):
 
     with pytest.raises(SystemExit, match="checkpoint"):
         main(["crawl", str(tmp_path), "--out", str(tmp_path / "o")])
+
+
+def test_make_dist_zip_serves_run_pipeline(tmp_path):
+    """The spark-submit path without a JVM: ``scripts/make_dist.sh``
+    zips every engine module, and ``scripts/run_pipeline.py`` imports
+    the CLI from that zip alone (run from a copy of ``scripts/`` beside
+    a ``riko_spark`` symlink, so ``dist/`` lands in tmp_path)."""
+    import shutil
+    import zipfile
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copytree(os.path.join(repo, "scripts"), tmp_path / "scripts")
+    os.symlink(os.path.join(repo, "riko_spark"), tmp_path / "riko_spark")
+    r = subprocess.run(["bash", str(tmp_path / "scripts" / "make_dist.sh")],
+                       capture_output=True, text=True, timeout=60)
+    assert r.returncode == 0, r.stderr[-2000:]
+    zpath = tmp_path / "dist" / "riko_spark.zip"
+    with zipfile.ZipFile(zpath) as z:
+        names = set(z.namelist())
+    want = {
+        os.path.relpath(os.path.join(root, f), repo)
+        for root, _, files in os.walk(os.path.join(repo, "riko_spark"))
+        for f in files if f.endswith(".py")
+    }
+    assert want and want <= names
+
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    r = subprocess.run(
+        [sys.executable, str(tmp_path / "scripts" / "run_pipeline.py")],
+        capture_output=True, text=True, timeout=60, cwd=elsewhere,
+        env=dict(os.environ, PYTHONPATH=str(zpath)))
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "usage: riko_spark" in r.stdout

@@ -266,3 +266,32 @@ def test_warn_drops_message_content():
     assert len(caught) == 1
     msg = str(caught[0].message)
     assert "unit_demo" in msg and "2 bucket" in msg and "max_bucket_size=5" in msg
+
+
+def test_poller_drains_dead_weakref_whose_hash_was_never_taken():
+    """A weak reference whose referent died before anything hashed it
+    cannot be hashed any more.  The poller must still retire it: one
+    that dies on it leaves the entry in _PENDING, so every later poller
+    dies on the same entry."""
+    import time
+    import weakref
+
+    from riko_spark.operators import dedupe as dd
+
+    with dd._PENDING_LOCK:
+        saved_pending, saved_poller = list(dd._PENDING), list(dd._POLLER)
+        stats = dd.CapStats(fallback=None, what="dead_ref")
+        ref = weakref.ref(stats)
+        del stats
+        assert ref() is None
+        dd._PENDING[:] = [(ref, time.monotonic())]
+        # this thread owns the poller slot for the synchronous call
+        dd._POLLER[:] = [threading.current_thread()]
+    try:
+        dd._poll_pending()
+        with dd._PENDING_LOCK:
+            assert dd._PENDING == []
+    finally:
+        with dd._PENDING_LOCK:
+            dd._PENDING[:] = saved_pending + dd._PENDING
+            dd._POLLER[:] = [t for t in saved_poller if t.is_alive()]
